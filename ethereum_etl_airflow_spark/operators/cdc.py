@@ -18,12 +18,13 @@ once the feed guarantees no older events can arrive (watermark).
 
 Execution strategy (Spark-first, scale-first — merge-on-read):
 
-  1. **delta write, not table rewrite**: the batch lands as per-bucket
-     DELTA files (bucket = pmod(xxhash64(doc_id), B)) with exactly ONE
-     shuffle (the bucket repartition). Write cost is O(batch)
-     regardless of table size — at 10^10 accumulated events a
-     copy-on-write MERGE would rewrite the full table every batch;
-     merge-on-read keeps per-batch cost flat.
+  1. **delta write, not table rewrite**: the batch lands as DELTA
+     files, one per write task, each holding whole buckets (bucket =
+     pmod(xxhash64(doc_id), B), stored in the file's ``_bucket``
+     column) with exactly ONE shuffle (the bucket repartition). Write
+     cost is O(batch) regardless of table size — at 10^10 accumulated
+     events a copy-on-write MERGE would rewrite the full table every
+     batch; merge-on-read keeps per-batch cost flat.
   2. **read-side LWW fold**: readers and compaction collapse rows with
      one hash aggregation ``groupBy(doc_id).agg(max_by(row, (_seq,
      _epoch)))`` (``sinks.snapshot_table.fold_lww``) — duplicates,
@@ -35,8 +36,9 @@ Execution strategy (Spark-first, scale-first — merge-on-read):
      in-batch fold (``fold_batch=True``) moves that work to the write
      side when batches carry many updates per key.
   3. **threshold compaction**: buckets whose file count reaches
-     ``table.compact_files`` are folded back to one file INSIDE the
-     same atomic commit — amortized O(log) rewrite like an LSM tree.
+     ``table.compact_files`` — widened to every bucket they share a
+     file with — are folded INSIDE the same atomic commit — amortized
+     O(log) rewrite like an LSM tree.
   4. **exactly-once**: the commit is fenced by (app_id, epoch) in the
      snapshot manifest; a replayed epoch is skipped before any work.
      The fold itself is idempotent at event level (same (doc_id, seq)
@@ -142,13 +144,19 @@ def apply_changes(
     )
 
     # threshold compaction: buckets already holding >= compact_files - 1
-    # files get folded (existing ∪ delta) into one file in this commit
-    counts = table.file_counts()
-    compact_set = {b for b, c in counts.items() if c + 1 >= table.compact_files}
+    # files, plus the buckets they share files with, get folded
+    # (existing ∪ delta) in this commit
+    snap = table.snapshot()
+    compact_set = {
+        int(b)
+        for b, fs in snap["bucket_files"].items()
+        if len(fs) + 1 >= table.compact_files
+    }
 
     if compact_set:
+        compact_set = SnapshotTable.bucket_closure(snap, compact_set)
         compact_list = sorted(compact_set)
-        if SnapshotTable._live_delete_layers(table.snapshot(), compact_list):
+        if SnapshotTable._live_delete_layers(snap, compact_list):
             # pending merge-on-read delete layers on these buckets: fold
             # through the layer-aware path (read_raw materializes the
             # masks); the commit's replace then clears the layers —
@@ -245,13 +253,13 @@ def _utc_epoch(ts: datetime) -> float:
 def _obs_get(obs: Observation, defaults: dict) -> dict:
     """Observation.get, tolerant of AQE empty-relation propagation: when
     a query stage is provably empty at runtime, AQE may eliminate the
-    CollectMetrics node entirely, so no metrics row exists — which can
-    only happen when every observed count is zero. Fall back to the
-    zero defaults in that case."""
-    try:
-        return obs.get
-    except Exception:
+    CollectMetrics node entirely, and the observation completes with an
+    empty row — which can only happen when every observed count is
+    zero. Fall back to the zero defaults in that case only; any other
+    failure raises."""
+    if obs._jo is not None and obs._jo.getRow().length() == 0:
         return defaults
+    return obs.get
 
 
 def _field_type(schema: T.StructType, name: str) -> T.DataType:

@@ -265,16 +265,19 @@ def _revert_to_base(
         )
         return {"base_version": base_v, "buckets_reverted": 0, "version": snap["version"]}
 
-    # byte-identical pre-reorg content of the affected buckets: the raw
-    # file rows at the base version, full LWW history included — the
-    # replace commit swaps the buckets' file lists back in one shot
-    restored = table.read_files(buckets=sorted(affected), version=base_v)
+    # byte-identical pre-reorg content of the affected buckets — and of
+    # the buckets sharing files with them at the head, which keep their
+    # base content too: the raw file rows at the base version, full LWW
+    # history included — the replace commit swaps the buckets' file
+    # lists back in one shot
+    rewrite = table.bucket_closure(head, affected)
+    restored = table.read_files(buckets=sorted(rewrite), version=base_v)
     out = restored.withColumn(
         "_bucket", bucket_expr(F.col("doc_id"), head["num_buckets"])
     )
     snap = table.commit(
         out,
-        replace_buckets=affected,
+        replace_buckets=rewrite,
         app_id=app_id,
         epoch=epoch,
         properties=props,

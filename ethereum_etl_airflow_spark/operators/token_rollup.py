@@ -151,6 +151,11 @@ class TokenVocabRollup:
                     [], "token string, n_occ long, n_docs long"
                 )
             else:
+                # the vocab buckets sharing files with a touched one
+                # are rewritten too, with their current counts
+                affected = SnapshotTable.bucket_closure(
+                    self.vocab.snapshot(), affected
+                )
                 cur = self._read_counts_raw(sorted(affected))
                 merged = (
                     delta.select("token", "d_occ", "d_docs")

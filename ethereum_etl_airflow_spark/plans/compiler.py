@@ -57,7 +57,13 @@ _BARE_REF_RE = re.compile(r"^\s*ref\(\s*'[^']+'\s*\)\s*$")
 
 
 def _ref_view_name(spec_name: str) -> str:
-    return "__contract_ref_" + re.sub(r"\W", "_", spec_name)
+    """Temp-view name for a ``ref('X')`` upstream: letters and digits
+    pass through and every other character becomes ``_<hex code>_``,
+    so distinct spec names never share a view (``a.b_c`` and
+    ``a_b.c`` stay apart)."""
+    return "__contract_ref_" + re.sub(
+        r"[^A-Za-z0-9]", lambda m: f"_{ord(m.group()):x}_", spec_name
+    )
 
 
 def _apply_contract_filter(out: DataFrame, ca, resolve_ref, spec_name: str):
@@ -92,6 +98,11 @@ def _apply_contract_filter(out: DataFrame, ca, resolve_ref, spec_name: str):
                 resolve_ref(r).createOrReplaceTempView(_ref_view_name(r))
             sql = REF_REGEX.sub(lambda m: _ref_view_name(m.group(1)), ca)
             res = spark.sql(sql)
+            if len(res.columns) != 1:
+                raise ValueError(
+                    f"spec {spec_name}: contract_address subquery must return "
+                    f"one column, got {len(res.columns)}: {res.columns}"
+                )
             addrs = res.select(F.col(res.columns[0]).alias("__addr"))
         return out.join(addrs, out["user_id"] == addrs["__addr"], "left_semi")
     return out.where(F.col("user_id").cast("string").isin(_contract_literals(ca)))

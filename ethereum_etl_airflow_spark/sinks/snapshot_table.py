@@ -8,18 +8,20 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
     pointer rename), the analogue of the reference's temp-table +
     WRITE_TRUNCATE publish (build_load_dag.py:174-182) and of an
     Iceberg snapshot commit;
-  * per-bucket file manifests: the table is hash-bucketed by
+  * bucket-indexed file manifests: the table is hash-bucketed by
     ``pmod(xxhash64(doc_id), num_buckets)`` (reference:
-    ``MOD(ABS(FARM_FINGERPRINT(key)), 3999)``, build_partition_dag.py:119);
-  * **merge-on-read writes**: a change batch lands as per-bucket DELTA
-    files (write cost = O(batch), independent of table size — the
-    property that keeps 10^10-event replay sustainable); readers fold
-    all files of a bucket with one hash aggregation
-    (``max_by(row, (_seq, _epoch))`` = last-writer-wins). When a
-    bucket accumulates ``compact_files`` files, it is compacted back
-    to a single file inside the same atomic commit (amortized O(log)
-    rewrites, LSM-style — the Hudi-MOR / Paimon pattern, and Iceberg's
-    MERGE + maintenance compaction);
+    ``MOD(ABS(FARM_FINGERPRINT(key)), 3999)``, build_partition_dag.py:119)
+    and the manifest's ``bucket_files`` maps each bucket to the files
+    holding its rows;
+  * **merge-on-read writes**: a change batch lands as DELTA files, one
+    per write task (write cost = O(batch), independent of table size
+    and of the bucket count — the property that keeps 10^10-event
+    replay sustainable); readers fold all files of a bucket with one
+    hash aggregation (``max_by(row, (_seq, _epoch))`` =
+    last-writer-wins). When a bucket accumulates ``compact_files``
+    files, it is compacted inside the same atomic commit (amortized
+    O(log) rewrites, LSM-style — the Hudi-MOR / Paimon pattern, and
+    Iceberg's MERGE + maintenance compaction);
   * exactly-once epoch fencing: the manifest carries
     ``last_epoch:<app_id>`` exactly like Iceberg snapshot-property
     fencing (``snapshot.summary['epoch']``; reference analogue:
@@ -33,14 +35,24 @@ so this module provides the same contract behind a seam (SURVEY §7.3):
 Swap-in path for real Iceberg: replace ``commit`` internals with
 ``MERGE INTO`` + snapshot properties; the public API is unchanged.
 
-The bucket value is a pure function of doc_id, so it is never stored —
-it is recomputed on read when needed (no partition-column plumbing).
+File layout (the irregular, data-sized partitioning of Jigsaw, SIGMOD
+2021): buckets stay the logical unit of fencing, compaction, pruning
+and lineage, but a file is sized by the data — one commit writes one
+file per write task, holding several buckets, with the bucket stored
+as an ordinary ``_bucket`` column. Such a file is listed in
+``bucket_files`` under EVERY bucket it holds, and a scan of some
+buckets filters it on ``_bucket`` (never by re-hashing ``doc_id``: a
+derived table may bucket by another column). Files written by older
+versions (``_bucket=N/`` directories) and the streaming sink's
+per-bucket files hold one bucket each, carry no ``_bucket`` column
+and are read unfiltered. A commit may only replace a set of buckets
+that shares no file with a bucket outside it (:meth:`bucket_closure`)
+— otherwise a rewritten bucket's superseded rows would stay live in
+the shared file.
 
-Scale note on the read-side fold: delta files of one bucket share the
-same doc_id hash bucket, so with Iceberg bucket-partitioning +
-storage-partitioned aggregation the fold shuffle disappears entirely;
-here the fold is a hash aggregation whose partial (map-side) combine
-already collapses each file's rows before the exchange.
+Scale note on the read-side fold: the fold is a hash aggregation whose
+partial (map-side) combine already collapses each file's rows before
+the exchange.
 """
 
 from __future__ import annotations
@@ -49,6 +61,7 @@ import copy
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -91,6 +104,22 @@ def fold_lww(df: DataFrame) -> DataFrame:
         df.groupBy("doc_id")
         .agg(winner.alias("_w"))
         .select("doc_id", *[F.col(f"_w.{c}").alias(c) for c in cols])
+    )
+
+
+def _remove_data_file(path: str) -> None:
+    """Remove a data file and its Hadoop checksum sidecar."""
+    os.remove(path)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _outside(r: list | None, lo, hi) -> bool:
+    """True when a recorded [min, max] range proves no value lies in
+    ``[lo, hi]`` (None = unbounded side); no range never skips."""
+    return r is not None and (
+        (hi is not None and r[0] > hi) or (lo is not None and r[1] < lo)
     )
 
 
@@ -196,7 +225,7 @@ class SnapshotTable:
                     int(s["parent_version"]),
                     float(s.get("committed_at") or 0.0),
                     int(s.get("num_buckets") or 0),
-                    sum(len(fs) for fs in s["bucket_files"].values()),
+                    len(SnapshotTable._file_buckets(s)),
                     len(s.get("commit_buckets") or []),
                     str((s.get("lineage") or {}).get("op") or ""),
                 )
@@ -208,24 +237,23 @@ class SnapshotTable:
         )
 
     def meta_files(self, version: int | None = None) -> DataFrame:
-        """One row per live data file of a snapshot (bucket, path, and
-        the per-file _seq skip range when tracked)."""
+        """One row per live data file of a snapshot (the buckets it
+        holds, its path, and its _seq skip range when tracked)."""
         snap = self.snapshot(version)
         seq_ranges = snap.get("file_seq_ranges") or {}
         rows = []
-        for b, fs in snap["bucket_files"].items():
-            for f in fs:
-                rng = seq_ranges.get(f)
-                rows.append(
-                    (
-                        int(b),
-                        f,
-                        int(rng[0]) if rng else None,
-                        int(rng[1]) if rng else None,
-                    )
+        for f, bs in self._file_buckets(snap).items():
+            rng = seq_ranges.get(f)
+            rows.append(
+                (
+                    sorted(int(b) for b in bs),
+                    f,
+                    int(rng[0]) if rng else None,
+                    int(rng[1]) if rng else None,
                 )
+            )
         return self.spark.createDataFrame(
-            rows, "bucket int, path string, min_seq long, max_seq long"
+            rows, "buckets array<int>, path string, min_seq long, max_seq long"
         )
 
     def meta_refs(self) -> DataFrame:
@@ -512,13 +540,48 @@ class SnapshotTable:
         locally-written files, absolute for clone references). Scan and
         layer-scope matching must use this canonical form — joining to
         the root and relpath-ing back mangles a clone's absolute entries
-        into '../..' forms that no layer scope contains."""
+        into '../..' forms that no layer scope contains. Each distinct
+        file appears once, however many of the buckets it holds."""
         keys = (
             [str(b) for b in buckets]
             if buckets is not None
-            else list(snap["bucket_files"])
+            else sorted(snap["bucket_files"], key=int)
         )
-        return [rel for k in keys for rel in snap["bucket_files"].get(k, [])]
+        return list(
+            dict.fromkeys(
+                rel for k in keys for rel in snap["bucket_files"].get(k, [])
+            )
+        )
+
+    @staticmethod
+    def _file_buckets(snap: dict) -> dict[str, set[str]]:
+        """Inverse of ``bucket_files``: each live file -> the buckets it
+        is listed under (one for a per-bucket file, several for a
+        multi-bucket file)."""
+        out: dict[str, set[str]] = {}
+        for b, fs in snap["bucket_files"].items():
+            for f in fs:
+                out.setdefault(f, set()).add(b)
+        return out
+
+    @classmethod
+    def bucket_closure(cls, snap: dict, buckets) -> set[int]:
+        """The smallest superset of ``buckets`` that shares no live file
+        with a bucket outside it. A commit that replaces a subset of
+        buckets must replace a closed set: a multi-bucket file leaves
+        the manifest only together with every bucket it holds, or the
+        rows it keeps for the others would be dropped (or, were it
+        left listed, the replaced bucket's superseded rows would stay
+        live in it)."""
+        owners = cls._file_buckets(snap)
+        out = {str(b) for b in buckets}
+        todo = list(out)
+        while todo:
+            for f in snap["bucket_files"].get(todo.pop(), []):
+                for b in owners[f] - out:
+                    out.add(b)
+                    todo.append(b)
+        return {int(b) for b in out}
 
     def read_files(
         self,
@@ -546,7 +609,7 @@ class SnapshotTable:
         if schema is None or not rels:
             empty_schema = schema or T.StructType([T.StructField("doc_id", T.StringType())])
             return self.spark.createDataFrame([], empty_schema)
-        df = self._scan_rels(snap, rels)
+        df = self._scan_rels(snap, rels, buckets)
         if columns is not None:
             need = ["doc_id", *INTERNAL_COLS]
             sel = need + [c for c in columns if c not in need]
@@ -564,7 +627,9 @@ class SnapshotTable:
                 col = r["new"]
         return col
 
-    def _scan_rels(self, snap: dict, rels: list[str]) -> DataFrame:
+    def _scan_rels(
+        self, snap: dict, rels: list[str], buckets: list[int] | None = None
+    ) -> DataFrame:
         """Scan data files through the snapshot's CURRENT schema,
         translating files written before a metadata-only column rename
         (:meth:`rename_column`): each rename layer scopes the files
@@ -572,19 +637,27 @@ class SnapshotTable:
         schema with the old name substituted back, then the column is
         renamed forward. Files sharing the same applicable-rename
         signature scan together — one read per generation, not per
-        file."""
+        file.
+
+        With ``buckets``, a file that also holds buckets outside the
+        list is filtered on its stored ``_bucket`` column; a file whose
+        buckets all lie inside it (every per-bucket file) is read
+        unfiltered."""
         schema = T.StructType.fromJson(snap["schema"])
         layers = snap.get("rename_layers") or []
         scoped = [
             (i, {f for fs in lay["files"].values() for f in fs})
             for i, lay in enumerate(layers)
         ]
-        groups: dict[frozenset, list[str]] = {}
+        req = None if buckets is None else {str(b) for b in buckets}
+        owners = {} if req is None else self._file_buckets(snap)
+        groups: dict[tuple[frozenset, bool], list[str]] = {}
         for rel in rels:
             sig = frozenset(i for i, files in scoped if rel in files)
-            groups.setdefault(sig, []).append(rel)
+            partial = req is not None and not owners.get(rel, set()) <= req
+            groups.setdefault((sig, partial), []).append(rel)
         parts: list[DataFrame] = []
-        for sig, group in groups.items():
+        for (sig, partial), group in groups.items():
             read_schema = schema
             # walk renames newest-first to recover the names the files
             # were written under (a column renamed twice unwinds fully)
@@ -600,9 +673,15 @@ class SnapshotTable:
                         for f in read_schema.fields
                     ]
                 )
+            if partial:
+                read_schema = T.StructType(
+                    [*read_schema.fields, T.StructField("_bucket", T.IntegerType())]
+                )
             df = self.spark.read.schema(read_schema).parquet(
                 *[os.path.join(self.root, r) for r in group]
             )
+            if partial:
+                df = df.where(F.col("_bucket").isin(sorted(int(b) for b in req)))
             for i in sorted(sig):  # replay forward
                 df = df.withColumnRenamed(layers[i]["old"], layers[i]["new"])
             parts.append(df.select(*[f.name for f in schema.fields]))
@@ -736,7 +815,7 @@ class SnapshotTable:
         def scan(rels: list[str]) -> DataFrame | None:
             if not rels:
                 return None
-            df = self._scan_rels(snap, rels)
+            df = self._scan_rels(snap, rels, buckets)
             if columns is not None:
                 need = ["doc_id", *INTERNAL_COLS, *pred_cols]
                 sel = need + [c for c in columns if c not in need]
@@ -752,13 +831,15 @@ class SnapshotTable:
         cur: DataFrame | None = None
         done: set[str] = set()
         for lay in layers:
-            rels = [
-                f
-                for b, fs in lay["files"].items()
-                if b in req
-                for f in fs
-                if f not in done
-            ]
+            rels = list(
+                dict.fromkeys(
+                    f
+                    for b, fs in lay["files"].items()
+                    if b in req
+                    for f in fs
+                    if f not in done
+                )
+            )
             done.update(rels)
             part = scan(rels)
             if part is None and cur is None:
@@ -783,8 +864,7 @@ class SnapshotTable:
             )
         rest = [
             f
-            for b in sorted(req, key=int)
-            for f in snap["bucket_files"].get(b, [])
+            for f in self._manifest_rels(snap, sorted(req, key=int))
             if f not in done
         ]
         tail = scan(rest)
@@ -925,17 +1005,11 @@ class SnapshotTable:
         (pre-feature commits, missing stats) are always kept — never a
         false skip."""
         ranges = snap.get("file_seq_ranges") or {}
-        out: list[str] = []
-        for b in sorted(snap["bucket_files"], key=int):
-            for rel in snap["bucket_files"][b]:
-                r = ranges.get(rel)
-                if r is not None and (
-                    (hi is not None and r[0] > hi)
-                    or (lo is not None and r[1] < lo)
-                ):
-                    continue
-                out.append(rel)
-        return out
+        return [
+            rel
+            for rel in cls._manifest_rels(snap, None)
+            if not _outside(ranges.get(rel), lo, hi)
+        ]
 
     def read_seq_range(
         self,
@@ -974,17 +1048,11 @@ class SnapshotTable:
         ``col`` (pre-stats commits, missing footer stats) are always
         kept — never a false skip."""
         stats = snap.get("file_col_stats") or {}
-        out: list[str] = []
-        for b in sorted(snap["bucket_files"], key=int):
-            for rel in snap["bucket_files"][b]:
-                r = (stats.get(rel) or {}).get(col)
-                if r is not None and (
-                    (hi is not None and r[0] > hi)
-                    or (lo is not None and r[1] < lo)
-                ):
-                    continue
-                out.append(rel)
-        return out
+        return [
+            rel
+            for rel in cls._manifest_rels(snap, None)
+            if not _outside((stats.get(rel) or {}).get(col), lo, hi)
+        ]
 
     def read_where(
         self,
@@ -1022,7 +1090,7 @@ class SnapshotTable:
         entirely on the driver: building the result DataFrame launches
         ZERO Spark jobs). The key predicate is then pushed into the
         parquet scan (row groups skip via min/max stats — files are
-        doc_id-sorted within buckets), and only what's left is folded.
+        doc_id-sorted), and only what's left is folded.
         Cost is O(|keys| · matching-files), independent of table size."""
         # the queried snapshot's fan-out + blooms, not the current ones —
         # time travel across a rebucket must prune with the old layout
@@ -1128,11 +1196,16 @@ class SnapshotTable:
         the bucket's COMPLETE new content (compaction — file list
         replaced), for every other bucket they are a DELTA (files
         appended). Epoch fencing property is advanced for ``app_id``.
+        ``replace_buckets`` must share no live file with a bucket
+        outside it (widen it with :meth:`bucket_closure`); the commit
+        raises before writing anything otherwise.
 
-        ``align_buckets=False`` skips the bucket repartition — valid
-        ONLY when the caller knows ``out_df``'s partitioning already
-        groups buckets (pre-bucketed feed, e.g. a key-partitioned
-        Kafka topic): the ingest becomes shuffle-free.
+        Each write task writes one file, listed in ``bucket_files``
+        under every bucket its rows carry in ``_bucket``.
+        ``align_buckets=False`` skips the bucket exchange, so the
+        ingest is shuffle-free: correct for any partitioning, and
+        compact when ``out_df``'s partitioning already groups buckets
+        (pre-bucketed feed, e.g. a key-partitioned Kafka topic).
 
         ``properties`` merges extra key/values into the snapshot
         properties in the SAME atomic commit (the Iceberg
@@ -1165,88 +1238,115 @@ class SnapshotTable:
         only atomicity + fencing (the Iceberg-commit seam).
         """
         prev = self.snapshot()
+        if replace_buckets and not full_replace:
+            shared = self.bucket_closure(prev, replace_buckets) - set(replace_buckets)
+            if shared:
+                raise ValueError(
+                    "replace_buckets shares live files with buckets "
+                    f"{sorted(shared)} outside it; widen it with "
+                    "bucket_closure() first"
+                )
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self._data, commit_id)
 
+        own: list[str] = []
         if out_df is not None:
+            out_df = out_df.withColumn("_bucket", F.col("_bucket").cast("int"))
             if align_buckets:
                 n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
                 out_df = out_df.repartition(n_out, "_bucket")
-            # sort within each file: parquet column min/max stats then let
-            # scans skip whole row groups (Iceberg sort-order analogue; the
-            # write already sorts by _bucket for partitionBy, the extra keys
-            # cost nothing extra). Default key = doc_id (point lookups);
-            # ``sort_cols`` overrides for layout rewrites (e.g. a Z-order
-            # key for 2-D pruning, or _seq for replay-range scans).
-            sort_keys = ["_bucket", *(sort_cols or ["doc_id"])]
-            out_df.sortWithinPartitions(*sort_keys).write.partitionBy(
-                "_bucket"
-            ).parquet(out_dir)
+            # one file per write task, holding whole buckets (the
+            # exchange above) with _bucket stored as an ordinary column.
+            # Rows sort by the sort key alone so parquet min/max stats
+            # let scans skip whole row groups (Iceberg sort-order
+            # analogue). Default key = doc_id (point lookups);
+            # ``sort_cols`` overrides for layout rewrites (e.g. a
+            # Z-order key for 2-D pruning, or _seq for replay-range
+            # scans).
+            out_df.sortWithinPartitions(*(sort_cols or ["doc_id"])).write.parquet(
+                out_dir
+            )
+            rel_dir = os.path.relpath(out_dir, self.root)
+            own = sorted(
+                os.path.join(rel_dir, fn)
+                for fn in os.listdir(out_dir)
+                if fn.endswith(".parquet")
+            )
 
-        # collect the files each bucket landed in
-        written: dict[str, list[str]] = dict(prewritten or {})
-        if os.path.isdir(out_dir):
-            for entry in os.listdir(out_dir):
-                if not entry.startswith("_bucket="):
-                    continue
-                b = entry.split("=", 1)[1]
-                rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-                files = [
-                    os.path.join(rel_dir, fn)
-                    for fn in os.listdir(os.path.join(out_dir, entry))
-                    if fn.endswith(".parquet")
-                ]
-                written.setdefault(b, []).extend(files)
+        # one local pass over this commit's files (pyarrow, no Spark
+        # job). It decides which buckets list each file — read
+        # from the file's own _bucket column; a prewritten file holds
+        # the one bucket it was staged for — and records per-bucket
+        # rows landed (the north rule's per-partition lineage), each
+        # file's [min,max] _seq (delta files are written per epoch, so
+        # replay-from-offset scans touch O(files in range)) and the
+        # stats_cols ranges. Any failure fails the commit before
+        # publish: a swallowed error would drop files from the manifest.
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-        # per-file Bloom words for THIS commit's rows: one O(batch)
-        # aggregation; each file written for bucket b gets bucket b's
-        # words (with aligned buckets a commit writes one file per
-        # bucket, so the entry is exact; an unaligned multi-file bucket
-        # gets a superset bloom per file — still correct, never false-
-        # absent)
-        new_bloom_entries: dict[str, list[int]] = {}
-        if self.bloom_bits and written and out_df is not None:
-            bucket_words = self._commit_bloom_words(out_df)
-            for b, files in written.items():
-                words = bucket_words.get(b)
-                if words is not None:
-                    for f in files:
-                        new_bloom_entries[f] = words
-
-        # per-partition lineage + per-file _seq skip index, both from
-        # the parquet footers of this commit's files (driver-local
-        # metadata reads, no Spark job): rows landed per bucket (the
-        # north rule's per-partition offset/count/snapshot lineage) and
-        # each file's [min,max] _seq — delta files are written per
-        # epoch, so the ranges are tight and disjoint, making
-        # replay-from-offset scans O(files in range), not O(files)
+        written: dict[str, list[str]] = {}
+        # each new file once, under its lowest bucket (CDF planning and
+        # per-commit file counts read this; bucket_files lists it under
+        # every bucket it holds)
+        added: dict[str, list[str]] = {}
+        file_buckets: dict[str, list[str]] = {}
         bucket_rows: dict[str, int] = {}
         new_seq_entries: dict[str, list[int]] = {}
         new_stat_entries: dict[str, dict] = {}
-        try:
-            import pyarrow.parquet as pq
+        staged = [(f, None) for f in own] + [
+            (f, b) for b, fs in (prewritten or {}).items() for f in fs
+        ]
+        for rel, bucket in staged:
+            path = os.path.join(self.root, rel)
+            pf = pq.ParquetFile(path)
+            md = pf.metadata
+            if bucket is None:
+                counts = {
+                    str(vc["values"]): vc["counts"]
+                    for vc in pc.value_counts(
+                        pf.read(columns=["_bucket"]).column(0)
+                    ).to_pylist()
+                }
+                if not counts:  # an empty write still leaves one file
+                    _remove_data_file(path)
+                    continue
+            else:
+                counts = {bucket: md.num_rows}
+            for b, n in counts.items():
+                written.setdefault(b, []).append(rel)
+                bucket_rows[b] = bucket_rows.get(b, 0) + n
+            added.setdefault(min(counts, key=int), []).append(rel)
+            file_buckets[rel] = list(counts)
+            rng = self._seq_range_from_footer(md)
+            if rng is not None:
+                new_seq_entries[rel] = rng
+            stats = {
+                c: r
+                for c in self.stats_cols
+                if (r := self._col_range_from_footer(md, c)) is not None
+            }
+            if stats:
+                new_stat_entries[rel] = stats
 
-            for b, files in written.items():
-                n = 0
-                for f in files:
-                    md = pq.ParquetFile(os.path.join(self.root, f)).metadata
-                    n += md.num_rows
-                    rng = self._seq_range_from_footer(md)
-                    if rng is not None:
-                        new_seq_entries[f] = rng
-                    if self.stats_cols:
-                        stats = {
-                            c: r
-                            for c in self.stats_cols
-                            if (r := self._col_range_from_footer(md, c)) is not None
-                        }
-                        if stats:
-                            new_stat_entries[f] = stats
-                bucket_rows[b] = n
-        except Exception:
-            bucket_rows = {}
-            new_seq_entries = {}
-            new_stat_entries = {}
+        # per-file Bloom words for THIS commit's rows: one O(batch)
+        # aggregation per bucket; a file's words are the OR of the
+        # words of every bucket it holds (prewritten files get none:
+        # absent entry = always scanned, never a false skip)
+        new_bloom_entries: dict[str, list[int]] = {}
+        own = [f for f in own if f in file_buckets]
+        if out_df is not None and not own:
+            shutil.rmtree(out_dir)  # nothing written but the job marker
+        if self.bloom_bits and own:
+            bucket_words = self._commit_bloom_words(out_df)
+            for f in own:
+                parts = [bucket_words.get(b) for b in file_buckets[f]]
+                if None in parts:
+                    continue  # no entry: the file stays always-scanned
+                words = parts[0]
+                for ws in parts[1:]:
+                    words = [a | b for a, b in zip(words, ws)]
+                new_bloom_entries[f] = words
 
         schema = new_schema or self.schema()
         if schema is None:
@@ -1256,7 +1356,7 @@ class SnapshotTable:
             """Manifest for THIS commit's already-written files on top
             of ``base`` — pure, so a CAS-lost commit can rebase onto
             the new head and re-publish without rewriting any data."""
-            deltas = dict(written)
+            deltas = {b: list(fs) for b, fs in written.items()}
             if full_replace:
                 # whole-table rewrite (rebucketing): the new file set IS
                 # the table; every previous bucket is dropped
@@ -1294,7 +1394,7 @@ class SnapshotTable:
                 # THIS commit's own added-file list — the CDF source
                 # plans change partitions from it directly, so planning
                 # never needs the parent manifest (which may be expired)
-                "added_files": {b: list(fs) for b, fs in written.items()},
+                "added_files": added,
                 "properties": props,
                 "lineage": lineage or {},
             }
@@ -1485,14 +1585,19 @@ class SnapshotTable:
         app_id: str = "maintenance",
         sort_by: list[str] | None = None,
     ) -> dict:
-        """Fold the given buckets (default: all) down to one file each.
-        Logical state is unchanged — except tombstones older than
-        ``drop_tombstones_below`` (a seq watermark) are physically
-        dropped, safe once the feed guarantees no older event can still
-        arrive (the reference's partition GC, build_clean_dag.py:99-115,
-        and its 72h TTL side tables, build_partition_dag.py:113-115)."""
+        """Fold the given buckets (default: all) down to one file per
+        write task, widened first to the buckets they share files with
+        (:meth:`bucket_closure`). Logical state is unchanged — except
+        tombstones older than ``drop_tombstones_below`` (a seq
+        watermark) are physically dropped, safe once the feed
+        guarantees no older event can still arrive (the reference's
+        partition GC, build_clean_dag.py:99-115, and its 72h TTL side
+        tables, build_partition_dag.py:113-115)."""
+        snap = self.snapshot()
         if buckets is None:
-            buckets = [int(b) for b in self.snapshot()["bucket_files"]]
+            buckets = [int(b) for b in snap["bucket_files"]]
+        else:
+            buckets = sorted(self.bucket_closure(snap, buckets))
         folded = self.read_raw(buckets)
         if drop_tombstones_below is not None:
             folded = folded.where(
@@ -1571,17 +1676,23 @@ class SnapshotTable:
                 and (hi is None or r[1] <= hi)
             )
 
+        touched = {
+            int(b)
+            for b, files in snap["bucket_files"].items()
+            if any(f in candidates for f in files)
+        }
         drop_buckets: list[int] = []
         rewrite_buckets: list[int] = []
-        files_dropped = 0
-        for b, files in snap["bucket_files"].items():
-            if not any(f in candidates for f in files):
-                continue
+        dropped: set[str] = set()
+        # buckets sharing a file with a touched one are replaced too
+        # (their rewrite keeps their content)
+        for b in sorted(self.bucket_closure(snap, touched)):
+            files = snap["bucket_files"].get(str(b), [])
             if not tombstones and files and all(fully_in(f) for f in files):
-                drop_buckets.append(int(b))
-                files_dropped += len(files)
+                drop_buckets.append(b)
+                dropped.update(files)
             else:
-                rewrite_buckets.append(int(b))
+                rewrite_buckets.append(b)
         if not drop_buckets and not rewrite_buckets:
             return {
                 "files_dropped": 0,
@@ -1645,7 +1756,7 @@ class SnapshotTable:
             },
         )
         return {
-            "files_dropped": files_dropped,
+            "files_dropped": len(dropped),
             "buckets_dropped_metadata_only": len(drop_buckets),
             "buckets_rewritten": len(rewrite_buckets),
             "rows_deleted_rewrite": rows_deleted,
@@ -1705,7 +1816,7 @@ class SnapshotTable:
         )
         return {
             "buckets_scoped": len(scope),
-            "files_scoped": sum(len(fs) for fs in scope.values()),
+            "files_scoped": len({f for fs in scope.values() for f in fs}),
             "version": result["version"],
         }
 
@@ -1893,7 +2004,10 @@ class SnapshotTable:
             rename_layers=[{"old": old, "new": new, "files": scope}] if scope else None,
             lineage={"op": "rename_column", "old": old, "new": new},
         )
-        return {"version": result["version"], "files_scoped": sum(len(v) for v in scope.values())}
+        return {
+            "version": result["version"],
+            "files_scoped": len({f for fs in scope.values() for f in fs}),
+        }
 
     def drop_column(self, name: str, app_id: str = "maintenance") -> dict:
         """Metadata-only column DROP: the column leaves the snapshot
@@ -1985,14 +2099,14 @@ class SnapshotTable:
         )
         return {
             "buckets_scoped": len(scope),
-            "files_scoped": sum(len(fs) for fs in scope.values()),
+            "files_scoped": len({f for fs in scope.values() for f in fs}),
             "key_file": key_file,
             "version": result["version"],
         }
 
     def rewrite_sorted(self, sort_by: list[str], app_id: str = "maintenance") -> dict:
         """Layout rewrite (Iceberg ``rewrite_data_files`` with a sort
-        order): compact every bucket to one file whose rows are sorted
+        order): compact every bucket to files whose rows are sorted
         by ``sort_by`` — parquet row-group min/max stats on those
         columns become tight, so predicate scans skip whole row groups.
         Pair with ``functions/layout.zvalue`` for 2-D pruning. Logical
@@ -2138,22 +2252,55 @@ class SnapshotTable:
                         referenced.add(kf)
         removed = 0
         orphan_cutoff = time.time() - orphan_grace_sec
-        for dirpath, _dirnames, filenames in os.walk(self._data):
+
+        def aged(path: str) -> bool:
+            try:
+                return os.path.getmtime(path) <= orphan_cutoff
+            except OSError:
+                return False
+
+        # bottom-up, so a commit directory empties before it is visited
+        emptied: set[str] = set()
+        for dirpath, _dirnames, filenames in os.walk(self._data, topdown=False):
+            gone: set[str] = set()
             for fn in filenames:
                 full = os.path.join(dirpath, fn)
                 rel = os.path.relpath(full, self.root)
                 if not fn.endswith(".parquet") or rel in referenced:
                     continue
-                if rel not in ever_referenced:
-                    # true orphan OR a concurrent writer's in-flight
-                    # files — only reap past the grace age
-                    try:
-                        if os.path.getmtime(full) > orphan_cutoff:
-                            continue
-                    except OSError:
-                        continue
+                # true orphan OR a concurrent writer's in-flight files
+                # — only reap past the grace age
+                if rel not in ever_referenced and not aged(full):
+                    continue
                 os.remove(full)
+                gone.add(fn)
                 removed += 1
+            # Hadoop bookkeeping: a data file's ".<name>.crc" checksum
+            # goes with its file; the job's _SUCCESS marker (and its
+            # checksum) once its directory's data is gone, or past the
+            # grace age
+            data_left = any(
+                fn.endswith(".parquet") and fn not in gone for fn in filenames
+            )
+            for fn in filenames:
+                if fn.endswith(".parquet"):
+                    continue
+                full = os.path.join(dirpath, fn)
+                owner = fn[1:-4] if fn.startswith(".") and fn.endswith(".crc") else ""
+                if owner.endswith(".parquet"):
+                    dead = owner in gone or (owner not in filenames and aged(full))
+                else:
+                    dead = (bool(gone) and not data_left) or aged(full)
+                if dead:
+                    os.remove(full)
+                    gone.add(fn)
+            if (
+                dirpath != self._data
+                and not os.listdir(dirpath)
+                and (gone or dirpath in emptied or aged(dirpath))
+            ):
+                os.rmdir(dirpath)
+                emptied.add(os.path.dirname(dirpath))
         for entry in os.listdir(self._meta):
             if entry.startswith("snapshot-"):
                 v = int(entry.split("-")[1].split(".")[0])

@@ -24,13 +24,15 @@ Semantics — the raw change-event stream:
 * **maintenance commits emit nothing** (compaction, delete_where,
   rebucket, rename: rewrites of existing logical rows). A CDC commit
   that compacts buckets in the SAME commit mixes delta and rewritten
-  rows in one file — those partitions filter ``_epoch == commit epoch``
-  so rewrites are never re-emitted.
+  rows in one file — a file holding any compacted bucket filters
+  ``_epoch == commit epoch`` so rewrites are never re-emitted.
 * **scale**: ``partitions()`` plans on the driver from manifest JSON
-  (zero Spark jobs); each data file becomes one input partition read
-  on an EXECUTOR via pyarrow, yielded as Arrow RecordBatches (the
-  vectorized path — no per-row Python). Schema is pinned at stream
-  start; later files project/pad onto it (evolution-tolerant).
+  (zero Spark jobs); each distinct data file becomes one input
+  partition (a multi-bucket file is listed under several buckets but
+  read once), read on an EXECUTOR via pyarrow, yielded as Arrow
+  RecordBatches (the vectorized path — no per-row Python). Schema is
+  pinned at stream start; later files project/pad onto it
+  (evolution-tolerant).
 
 Register once per session with :func:`register_cdf_source`, then::
 
@@ -154,20 +156,25 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
                     for b, files in snap["bucket_files"].items()
                 }
             compacted = {str(b) for b in lin.get("compacted_buckets") or []}
-            for b, files in added.items():
+            holds: dict[str, set[str]] = {}
+            for b, files in snap["bucket_files"].items():
                 for rel in files:
-                    out.append(
-                        _FilePartition(
-                            path=os.path.join(self.root, rel),
-                            version=v,
-                            # a compacting CDC commit folds old rows into
-                            # the same new file — emit only this epoch's
-                            epoch_filter=(
-                                int(lin["epoch"]) if b in compacted else None
-                            ),
-                            schema_json=schema_json,
-                        )
+                    holds.setdefault(rel, set()).add(b)
+            for rel in dict.fromkeys(f for fs in added.values() for f in fs):
+                out.append(
+                    _FilePartition(
+                        path=os.path.join(self.root, rel),
+                        version=v,
+                        # a compacting CDC commit folds old rows into
+                        # the same new file — emit only this epoch's
+                        epoch_filter=(
+                            int(lin["epoch"])
+                            if holds.get(rel, set()) & compacted
+                            else None
+                        ),
+                        schema_json=schema_json,
                     )
+                )
         return out or [
             # Spark requires >= 1 partition per batch; an empty marker
             # partition yields no rows

@@ -15,6 +15,7 @@ import pytest
 
 from ethereum_etl_airflow_spark.plans.compiler import (
     _contract_literals,
+    _ref_view_name,
     compile_spec,
 )
 from ethereum_etl_airflow_spark.plans.spec import parse_spec
@@ -114,3 +115,28 @@ def test_ref_subquery_without_resolver_raises(spark):
     spec = _spec("SELECT pair FROM ref('demo.factory')")
     with pytest.raises(ValueError, match="resolve_ref"):
         compile_spec(spec, _feed(spark, [A1]))
+
+
+def test_ref_subquery_with_two_columns_raises(spark):
+    spec = _spec("SELECT pair, user_id FROM ref('demo.factory')")
+    upstream = spark.createDataFrame([(A2, A1)], "user_id string, pair string")
+    with pytest.raises(ValueError, match="one column, got 2"):
+        compile_spec(spec, _feed(spark, [A1]), resolve_ref=lambda n: upstream)
+
+
+def test_ref_view_names_are_injective(spark):
+    names = ["a.b_c", "a_b.c", "a_b_c", "a.b.c", "a-b.c", "a_2e_b"]
+    views = [_ref_view_name(n) for n in names]
+    assert len(set(views)) == len(names)
+    # two refs whose old view names collided resolve to their own data
+    spec = _spec(
+        "SELECT pool FROM ref('demo.b_c') UNION ALL SELECT pool FROM ref('demo_b.c')"
+    )
+    ups = {
+        "demo.b_c": spark.createDataFrame([(A1,)], "pool string"),
+        "demo_b.c": spark.createDataFrame([(A2,)], "pool string"),
+    }
+    out = compile_spec(
+        spec, _feed(spark, [A1, A2, A3]), resolve_ref=lambda n: ups[n]
+    )
+    assert sorted(r["event_id"] for r in out.collect()) == [0, 1]

@@ -95,3 +95,35 @@ def test_orphan_grace_protects_inflight_writes(spark, tmp_path):
     os.utime(orphan, (os.path.getmtime(orphan) - old,) * 2)
     assert t.expire_snapshots(keep_last=1, orphan_grace_sec=600) == 1
     assert not orphan.exists()
+
+
+def test_expire_removes_sidecars_markers_and_empty_dirs(spark, tmp_path):
+    """After compaction and expiry, every file under data/ is a
+    referenced data file or the checksum sidecar of one, and no
+    emptied commit directory is left behind."""
+    import os
+
+    t = SnapshotTable(spark, str(tmp_path / "t"), num_buckets=4)
+    for s in (1, 2, 3):
+        _write(spark, t, [f"k{s}", "hot"], s)
+    t.compact()
+    t.expire_snapshots(keep_last=1, orphan_grace_sec=0)
+    data = os.path.join(t.root, "data")
+    live = {
+        os.path.join(t.root, f)
+        for fs in t.snapshot()["bucket_files"].values()
+        for f in fs
+    }
+    seen = set()
+    for dirpath, dirnames, filenames in os.walk(data):
+        if dirpath != data:
+            assert dirnames or filenames, f"empty directory left: {dirpath}"
+        for fn in filenames:
+            full = os.path.join(dirpath, fn)
+            sidecar_of = os.path.join(dirpath, fn[1:-4]) if fn.endswith(".crc") else None
+            assert full in live or sidecar_of in live, full
+            seen.add(full)
+    assert live <= seen
+    assert {r.doc_id: r.val for r in t.read().collect()} == {
+        "k1": 1, "k2": 2, "k3": 3, "hot": 3
+    }
